@@ -40,8 +40,12 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from chronon_spark.api import (
     MUTATION_TIME_COLUMN,
@@ -57,10 +61,11 @@ from chronon_spark.api import (
 )
 from chronon_spark.operators.sawtooth import _naive_one
 from chronon_spark.operators.temporal_join import (
-    _emit,
-    _empty_feature,
-    _np_col,
-    _segment_codes,
+    _NO_TS,
+    _input_columns,
+    _key_codes,
+    _to_arrow,
+    _values,
     output_sql_type,
 )
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
@@ -470,9 +475,7 @@ def temporal_entity_features(
             )
         )
     right_types = dict(snapshot_df.dtypes)
-    input_cols = sorted(
-        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
-    )
+    input_cols = _input_columns(parts)
     feature_fields = [
         (f"{prefix}{p.output_name}", output_sql_type(p, right_types[p.input_column]))
         for p in parts
@@ -498,40 +501,33 @@ def temporal_entity_features(
     )
     right = snap.unionByName(mut)
 
-    left_q = left_df.withColumn(_QDAY, F.expr(f"{time_col} DIV {DAY_MS}"))
     left_cols = [f.name for f in left_df.schema.fields]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left_df.schema.fields]
-        + [f"`{n}` {t}" for n, t in feature_fields]
-    )
-    lkey_exprs = [
-        F.col(lk).cast(right_types[rk]) for lk, rk in zip(left_keys, right_keys)
-    ]
-    l_bucket = F.pmod(F.xxhash64(*lkey_exprs, F.col(_QDAY)), F.lit(buckets))
-    r_bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in right_keys], F.col(_QDAY)), F.lit(buckets)
-    )
-    seg_l = list(left_keys) + [_QDAY]
+    # left keys cast to the right's types so the bucket hash and the
+    # kernel's key codes agree
+    left_q = left_df.withColumn(_QDAY, F.expr(f"{time_col} DIV {DAY_MS}"))
+    seg_l = [f"__key{i}" for i in range(len(left_keys))] + [_QDAY]
+    for name, lk, rk in zip(seg_l, left_keys, right_keys):
+        left_q = left_q.withColumn(name, F.col(lk).cast(right_types[rk]))
     seg_r = list(right_keys) + [_QDAY]
-    seg_types = [right_types[rk] for rk in right_keys] + ["bigint"]
+    out_schema = StructType(
+        list(left_df.schema.fields)
+        + _parse_datatype_string(
+            ", ".join(f"`{n}` {t}" for n, t in feature_fields)).fields
+    )
+    ftypes = [to_arrow_type(out_schema[n].dataType) for n, _ in feature_fields]
+    l_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in seg_l]), F.lit(buckets))
+    r_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in seg_r]), F.lit(buckets))
 
-    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=left_cols + [n for n, _ in feature_fields])
-        nq = len(lpdf)
-        out = lpdf[left_cols].copy().reset_index(drop=True)
-        if len(rpdf) == 0:
-            for (name, sql_type), part in zip(feature_fields, parts):
-                out[name] = _empty_feature(part, sql_type, nq)
-            return out
-        lcode, rcode = _segment_codes(lpdf, rpdf, seg_l, seg_r, seg_types)
-        lts = lpdf[time_col].to_numpy().astype(np.int64)
+    def kernel(left: pa.Table, right: pa.Table) -> pa.Table:
+        nq = left.num_rows
+        lcode, rcode = _key_codes([left[k] for k in seg_l], [right[k] for k in seg_r])
+        lts = pc.fill_null(left[time_col].cast(pa.int64()), _NO_TS).to_numpy()
         rorder = np.argsort(rcode, kind="stable")
         rcode_s = rcode[rorder]
-        rts_s = rpdf[TIME_COLUMN].to_numpy().astype(np.int64)[rorder]
-        mut_ts = rpdf["__mut_ts"].to_numpy(dtype=np.float64)[rorder]
-        signs = rpdf["__sign"].to_numpy(dtype=np.int64)[rorder]
-        evals = {c: _np_col(rpdf, c, right_types[c])[rorder] for c in input_cols}
+        rts_s = right[TIME_COLUMN].to_numpy()[rorder]
+        mut_ts = _values(right["__mut_ts"])[rorder]
+        signs = right["__sign"].to_numpy()[rorder].astype(np.int64)
+        evals = {c: _values(right[c])[rorder] for c in input_cols}
         outs: dict[str, np.ndarray] = {}
         for (name, _), part in zip(feature_fields, parts):
             arr = np.empty(nq, dtype=object)
@@ -564,14 +560,16 @@ def temporal_entity_features(
                     evals, parts, views,
                 )
             a = b
-        for (name, sql_type), part in zip(feature_fields, parts):
-            out[name] = _emit(outs[name], sql_type)
-        return out
+        return pa.Table.from_arrays(
+            [left[c] for c in left_cols]
+            + [_to_arrow(outs[n], t) for (n, _), t in zip(feature_fields, ftypes)],
+            names=out_schema.names,
+        )
 
     grouped = left_q.groupBy(l_bucket.alias("__bucket")).cogroup(
         right.groupBy(r_bucket.alias("__bucket"))
     )
-    return grouped.applyInPandas(kernel, schema=out_schema)
+    return grouped.applyInArrow(kernel, schema=out_schema)
 
 
 def _mutation_scan(

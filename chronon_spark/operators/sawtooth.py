@@ -12,8 +12,11 @@ boundary inclusion :129-137 and SawtoothUdfSpec.scala:256-259; hop sizes
 Resolution.scala:38-48.
 
 The reference walks per-row mutable IRs over RDDs; this kernel instead runs
-inside Arrow batches (applyInPandas / cogroup.applyInPandas) on
-time-sorted numpy arrays:
+once per hash bucket of keys (temporal_join's applyInArrow kernels) on
+numpy arrays sorted by (key code, ts). A query's window never leaves its
+own key's run of events, so one searchsorted over a composite (key, ts)
+array bounds every key's windows at once and every structure below is
+built once per bucket, with no per-key loop:
   * sum/count/moments  -> O(n) nan-prefix power sums + searchsorted
   * min/max            -> O(n log n) sparse-table RMQ, O(1) per query
   * first/last         -> index arithmetic over non-null positions
@@ -34,7 +37,7 @@ from typing import Any, Optional
 
 import numpy as np
 
-from chronon_spark.api import AggregationPart, Operation, sawtooth_hop_millis
+from chronon_spark.api import AggregationPart, Operation, Window, sawtooth_hop_millis
 
 
 def _range_kth(vals_f: np.ndarray, start: np.ndarray, end: np.ndarray,
@@ -118,18 +121,53 @@ class _WaveletKth:
         return out
 
 
-def window_bounds(
-    event_ts: np.ndarray, query_ts: np.ndarray, part: AggregationPart
-) -> tuple[np.ndarray, np.ndarray]:
-    """(start_idx, end_idx) half-open event index ranges per query."""
-    end = np.searchsorted(event_ts, query_ts, side="right")  # head: ts <= T inclusive
-    if part.window is None:
-        start = np.zeros_like(end)
-    else:
-        hop = sawtooth_hop_millis(part.window)
-        tail_ts = ((query_ts - part.window.millis) // hop) * hop
-        start = np.searchsorted(event_ts, tail_ts, side="left")
-    return start, end
+class _Segments:
+    """Events sorted by (key code, ts), and the queries that probe them.
+
+    Each event's position key is `code * span + rank(ts)`, where rank is
+    the index of its timestamp among the distinct event timestamps, so one
+    `searchsorted` over that composite array gives every query's window
+    bounds for all keys at once. A query's bounds never leave its own
+    key's run of events, which is why the prefix sums, sparse tables,
+    wavelet trees and non-null indexes below are built once over the
+    whole array yet answer each key exactly as if it were alone. Ranks
+    rather than raw milliseconds keep the composite inside int64 for any
+    time span.
+    """
+
+    def __init__(self, event_ts: np.ndarray, event_keys: np.ndarray,
+                 query_ts: np.ndarray, query_keys: np.ndarray) -> None:
+        self.uniq = np.unique(event_ts)
+        self.span = len(self.uniq) + 2  # ranks -1 .. len(uniq) stay in a key
+        self.events = event_keys * self.span + np.searchsorted(self.uniq, event_ts)
+        self.query_ts = query_ts
+        self.query_keys = query_keys
+        self.base = query_keys * self.span
+        # head: ts <= T inclusive -> rank of the last distinct ts <= T
+        self.head = self.base + np.searchsorted(self.uniq, query_ts, side="right") - 1
+        self._tails: dict = {}
+
+    def bounds(self, events: np.ndarray, windows: list[Optional[Window]]):
+        """window millis (None = unbounded) -> (start, end) half-open
+        ranges into `events` — the composite array or any sorted
+        subsequence of it (exploded, one bucket)."""
+        end = np.searchsorted(events, self.head, side="right")
+        out = {}
+        for w in windows:
+            key = None if w is None else w.millis
+            if key not in out:
+                out[key] = np.searchsorted(events, self._tail(w), side="left"), end
+        return out
+
+    def _tail(self, window: Optional[Window]) -> np.ndarray:
+        if window is None:
+            return self.base
+        if window.millis not in self._tails:
+            hop = sawtooth_hop_millis(window)
+            tail_ts = ((self.query_ts - window.millis) // hop) * hop
+            self._tails[window.millis] = self.base + np.searchsorted(
+                self.uniq, tail_ts, side="left")
+        return self._tails[window.millis]
 
 
 class _RangeMinMax:
@@ -172,22 +210,40 @@ class _RangeMinMax:
         return out
 
 
-def _prefix_powers(vals: np.ndarray, max_power: int) -> tuple[float, list[np.ndarray]]:
-    """(shift, prefixes) where prefixes[p][i] = sum of (vals[:i]-shift)**p
-    ignoring NaN; prefixes[p][0] = 0. Values are centered on their key-level
-    mean before accumulation: central moments are shift-invariant, and the
-    shift kills the catastrophic cancellation that raw prefix sums suffer
-    when subtracting window boundaries (long history, short window)."""
-    v = vals.astype(np.float64, copy=False)
-    nn = ~np.isnan(v)
-    shift = float(v[nn].mean()) if nn.any() else 0.0
-    out = [np.concatenate(([0], np.cumsum(nn)))]  # power 0 = count
-    filled = np.where(nn, v - shift, 0.0)
-    acc = np.ones_like(filled)
-    for _ in range(max_power):
-        acc = acc * filled
-        out.append(np.concatenate(([0.0], np.cumsum(acc))))
-    return shift, out
+class _PowerSums:
+    """Power sums of a column over [start, end) ranges of one key.
+
+    Values are centred on their key's mean before accumulation: central
+    moments are shift-invariant, and the shift kills the cancellation that
+    raw prefix sums suffer when a short window sits on a long history.
+    The prefix array holds one extra slot in front of each key that
+    cancels the previous key's total, so it restarts near zero at every
+    key and a window's rounding depends on its own key's history only."""
+
+    def __init__(self, vals: np.ndarray, codes: np.ndarray, max_power: int) -> None:
+        v = vals.astype(np.float64, copy=False)
+        nn = ~np.isnan(v)
+        starts = np.flatnonzero(np.diff(codes, prepend=codes[:1] - 1))
+        self.keys = codes[starts]
+        cnt = np.add.reduceat(nn.astype(np.float64), starts)
+        self.shift = np.add.reduceat(np.where(nn, v, 0.0), starts) / np.maximum(cnt, 1)
+        filled = np.where(nn, v - np.repeat(self.shift, np.diff(starts, append=len(v))), 0.0)
+        # row p = nn * filled**p: power 0 counts the non-null values
+        powers = np.cumprod([nn.astype(np.float64)] + [filled] * max_power, axis=0)
+        totals = np.add.reduceat(powers, starts, axis=1) if len(v) else powers
+        slots = np.concatenate([np.zeros((max_power + 1, 1)), -totals[:, :-1]], axis=1)
+        ext = np.insert(powers, starts, slots[:, : len(starts)], axis=1)
+        self.prefix = np.concatenate(
+            [np.zeros((max_power + 1, 1)), np.cumsum(ext, axis=1)], axis=1)
+
+    def window(self, start: np.ndarray, end: np.ndarray, query_keys: np.ndarray):
+        """(count, power sums indexed by power, shift) per query."""
+        k = np.searchsorted(self.keys, query_keys)
+        top = self.prefix.shape[1] - 1
+        sums = (self.prefix[:, np.minimum(end + k + 1, top)]
+                - self.prefix[:, np.minimum(start + k + 1, top)])
+        shift = self.shift[np.minimum(k, len(self.keys) - 1)] if len(self.keys) else 0.0
+        return np.rint(sums[0]).astype(np.int64), sums, shift
 
 
 _MOMENT_POWER = {
@@ -206,10 +262,14 @@ def sawtooth_aggregate(
     parts: list[AggregationPart],
     array_inputs: Optional[set[str]] = None,
     map_inputs: Optional[set[str]] = None,
+    event_keys: Optional[np.ndarray] = None,
+    query_keys: Optional[np.ndarray] = None,
 ) -> dict[str, np.ndarray]:
-    """Per-key kernel. `event_ts` MUST be sorted ascending; `event_vals`
-    maps input column -> float/object array aligned with event_ts (NaN/None
-    = null). Returns output_name -> array aligned with query_ts (any order).
+    """Segmented kernel. `event_keys`/`query_keys` are int64 key codes (a
+    query sees only the events of its own code; omitted = one key), and
+    events MUST be sorted by (key code, ts). `event_vals` maps input
+    column -> float/object array aligned with event_ts (NaN/None = null).
+    Returns output_name -> array aligned with query_ts (any order).
 
     Bucketed parts (part.bucket set) produce dict outputs {bucket: value}
     (reference: BucketedColumnAggregator). Columns named in `array_inputs`
@@ -218,21 +278,45 @@ def sawtooth_aggregate(
     ColumnAggregator.scala:208-217). Columns named in `map_inputs` hold
     dicts and aggregate per map-key into map outputs (MapColumnAggregator).
     """
+    query_ts = np.asarray(query_ts, dtype=np.int64)
+    if event_keys is None:
+        event_keys = np.zeros(len(event_ts), dtype=np.int64)
+    if query_keys is None:
+        query_keys = np.zeros(len(query_ts), dtype=np.int64)
+    # queries run in (key, ts) order too: searchsorted over sorted probes
+    # walks memory forward, several times faster than random probes
+    qorder = np.lexsort((query_ts, query_keys))
+    seg = _Segments(np.asarray(event_ts, dtype=np.int64), event_keys,
+                    query_ts[qorder], query_keys[qorder])
     map_inputs = map_inputs or set()
+    array_inputs = array_inputs or set()
     plain = [p for p in parts
              if p.bucket is None and p.input_column not in map_inputs]
     bucketed = [p for p in parts
                 if p.bucket is not None and p.input_column not in map_inputs]
     mapped = [p for p in parts if p.input_column in map_inputs]
-    out = _sawtooth_plain(event_ts, event_vals, query_ts, plain, array_inputs or set())
+    out = _sawtooth_plain(seg, seg.events, event_vals, plain, array_inputs)
     for part in bucketed:
-        out[part.output_name] = _sawtooth_bucketed(
-            event_ts, event_vals, query_ts, part, array_inputs or set()
-        )
+        # bucket column must be string (reference: RowAggregator.scala:42-48)
+        labels = [None if b is None or b != b else str(b)
+                  for b in event_vals[part.bucket].tolist()]
+        out[part.output_name] = _sawtooth_by_label(
+            seg, seg.events, event_vals[part.input_column], _objects(labels),
+            part, array_inputs)
     for part in mapped:
-        out[part.output_name] = _sawtooth_mapcol(
-            event_ts, event_vals, query_ts, part
-        )
+        # explode the dicts ONCE into (event, map key, value) triples
+        pos, keys, vals = [], [], []
+        for j, d in enumerate(event_vals[part.input_column]):
+            for k, v in (d or {}).items():
+                pos.append(j)
+                keys.append(k)
+                vals.append(v)
+        out[part.output_name] = _sawtooth_by_label(
+            seg, seg.events[np.array(pos, dtype=np.int64)], _objects(vals),
+            _objects(keys), part, set())
+    for name, res in out.items():
+        out[name] = np.empty_like(res)
+        out[name][qorder] = res
     return out
 
 
@@ -268,97 +352,41 @@ def _fill_maps(maps: list[dict], b: str, r, op, nq: int) -> None:
         maps[i][b] = v
 
 
-def _sawtooth_mapcol(event_ts, event_vals, query_ts, part):
-    """map<string, V> input: aggregate each map key's values independently
-    -> map output (reference: MapColumnAggregator).
+def _sawtooth_by_label(seg: _Segments, events: np.ndarray, vals: np.ndarray,
+                       labels: np.ndarray, part: AggregationPart,
+                       array_inputs: set[str]) -> np.ndarray:
+    """`part` aggregated separately per non-null label of each event — a
+    bucket value (reference: BucketedColumnAggregator) or a map key
+    (MapColumnAggregator) — into one {label: value} dict per query.
 
-    Explodes the dicts ONCE into (ts, key, value) triples, factorizes the
-    keys and segments with a stable argsort — O(entries log entries) total
-    instead of O(|keys| x n_events) per-key scans."""
+    Labels are factorized once and segmented with a stable argsort, so
+    each label's events keep the (key code, ts) order the kernel needs:
+    O(n log n) total instead of one boolean mask per label."""
     import pandas as pd
 
-    nq = len(query_ts)
-    dicts = event_vals[part.input_column]
-    ts_list, key_list, val_list = [], [], []
-    for j, d in enumerate(dicts):
-        if d is None:
-            continue
-        t = event_ts[j]
-        for k, v in d.items():
-            ts_list.append(t)
-            key_list.append(k)
-            val_list.append(v)
+    nq = len(seg.query_ts)
     sub = AggregationPart(
         part.input_column, part.operation, dict(part.arg_map), part.window, None
     )
     maps: list[dict] = [dict() for _ in range(nq)]
-    if key_list:
-        flat_ts = np.array(ts_list, dtype=np.int64)
-        flat_vals = np.array(val_list, dtype=object)
-        codes, uniq = pd.factorize(np.array(key_list, dtype=object))
-        order = np.argsort(codes, kind="stable")  # ts order kept per key
-        oc = codes[order]
-        bounds = np.flatnonzero(np.diff(oc, prepend=oc[0] - 1))
-        bounds = np.append(bounds, len(oc))
-        for seg in range(len(bounds) - 1):
-            sel = order[bounds[seg]:bounds[seg + 1]]
-            k = uniq[oc[bounds[seg]]]
-            r = _sawtooth_plain(
-                flat_ts[sel], {part.input_column: flat_vals[sel]},
-                query_ts, [sub], set(),
-            )[sub.output_name]
-            _fill_maps(maps, k, r, part.operation, nq)
-    res = np.full(nq, None, dtype=object)
-    res[:] = maps
-    return res
-
-
-def _sawtooth_bucketed(event_ts, event_vals, query_ts, part, array_inputs):
-    """Per-bucket sub-aggregation -> map output. Bucket column must be
-    string (reference: RowAggregator.scala:42-48).
-
-    Buckets are factorized once and segmented with a stable argsort
-    (events stay time-sorted inside each segment) — O(n log n) total
-    instead of the O(|buckets| x n_events) per-bucket boolean masks."""
-    import pandas as pd
-
-    nq = len(query_ts)
-    bvals = event_vals[part.bucket]
-    sub = AggregationPart(
-        part.input_column, part.operation, dict(part.arg_map), part.window, None
-    )
-    maps: list[dict] = [dict() for _ in range(nq)]
-    bstr = np.array(
-        [None if b is None else str(b) for b in bvals.tolist()], dtype=object
-    ) if bvals.dtype == object else np.array(
-        [None if b != b else str(b) for b in bvals.tolist()], dtype=object
-    )
-    codes, uniq = pd.factorize(bstr)  # nulls -> -1
-    vals_in = event_vals[part.input_column]
+    codes, uniq = pd.factorize(labels)  # nulls -> -1
     order = np.argsort(codes, kind="stable")
     oc = codes[order]
     first_nn = int(np.searchsorted(oc, 0, side="left"))  # skip the -1 block
     order, oc = order[first_nn:], oc[first_nn:]
-    if len(oc):
-        bounds = np.flatnonzero(np.diff(oc, prepend=oc[0] - 1))
-        bounds = np.append(bounds, len(oc))
-        for seg in range(len(bounds) - 1):
-            sel = order[bounds[seg]:bounds[seg + 1]]
-            b = uniq[oc[bounds[seg]]]
-            r = _sawtooth_plain(
-                event_ts[sel], {part.input_column: vals_in[sel]},
-                query_ts, [sub], array_inputs,
-            )[sub.output_name]
-            _fill_maps(maps, b, r, part.operation, nq)
-    res = np.full(nq, None, dtype=object)
-    res[:] = maps
-    return res
+    bounds = np.flatnonzero(np.diff(oc, prepend=oc[:1] - 1))
+    for b0, b1 in zip(bounds, np.append(bounds[1:], len(oc))):
+        sel = order[b0:b1]
+        r = _sawtooth_plain(
+            seg, events[sel], {part.input_column: vals[sel]}, [sub], array_inputs,
+        )[sub.output_name]
+        _fill_maps(maps, uniq[oc[b0]], r, part.operation, nq)
+    return _objects(maps)
 
 
-def _notnull_mask_obj(vals: np.ndarray) -> np.ndarray:
-    if vals.dtype == object:
-        return np.array([v is not None for v in vals], dtype=bool)
-    return ~np.isnan(vals.astype(np.float64, copy=False))
+def _objects(values: list) -> np.ndarray:
+    """1-d object array of `values`, even when they are lists or dicts."""
+    return np.fromiter(values, dtype=object, count=len(values))
 
 
 def _utk_struct_index(vals: np.ndarray):
@@ -431,42 +459,47 @@ def _prev_occurrence(vals: np.ndarray) -> np.ndarray:
     return prev
 
 
-def _flatten_arrays(event_ts: np.ndarray, vals: np.ndarray):
-    """Explode list-valued events: repeat ts per element (ts order is
-    preserved, so the flattened arrays stay time-sorted)."""
+def _flatten_arrays(events: np.ndarray, vals: np.ndarray):
+    """Explode list-valued events: repeat each event's position key per
+    element (order is preserved, so the flattened arrays stay sorted)."""
     lens = np.array([0 if v is None else len(v) for v in vals], dtype=np.int64)
-    flat_ts = np.repeat(event_ts, lens)
+    flat_events = np.repeat(events, lens)
     flat_vals = np.array(
         [x for v in vals if v is not None for x in v], dtype=object
     )
-    return flat_ts, flat_vals
+    return flat_events, flat_vals
 
 
 def _sawtooth_plain(
-    event_ts: np.ndarray,
+    seg: _Segments,
+    events: np.ndarray,
     event_vals: dict[str, np.ndarray],
-    query_ts: np.ndarray,
     parts: list[AggregationPart],
     array_inputs: set[str],
 ) -> dict[str, np.ndarray]:
+    """Plain parts over `events`, a sorted subsequence of `seg.events`
+    whose values are `event_vals`."""
     out: dict[str, Any] = {}
-    nq = len(query_ts)
-    flat_cache: dict[str, tuple] = {}
-    # caches shared across parts touching the same input column
-    prefix_cache: dict[tuple[str, int], list[np.ndarray]] = {}
-    wavelet_cache: dict[str, _WaveletKth] = {}
-    rmm_cache: dict[tuple[str, bool], _RangeMinMax] = {}
-    nn_idx_cache: dict[str, np.ndarray] = {}
+    nq = len(seg.query_ts)
+    windows = [p.window for p in parts]
+    cache: dict = {}
+
+    def cached(key, build):
+        """Structures shared by every part that reads the same column
+        (and, for window bounds, the same window)."""
+        if key not in cache:
+            cache[key] = build()
+        return cache[key]
 
     for part in parts:
         col = part.input_column
         if col in array_inputs:
-            if col not in flat_cache:
-                flat_cache[col] = _flatten_arrays(event_ts, event_vals[col])
-            ets_c, vals = flat_cache[col]
+            ev, vals = cached(("flat", col), lambda: _flatten_arrays(events, event_vals[col]))
         else:
-            ets_c, vals = event_ts, event_vals[col]
-        start, end = window_bounds(ets_c, query_ts, part)
+            ev, vals = events, event_vals[col]
+        bounds = cached(("bounds", col if col in array_inputs else None),
+                        lambda: seg.bounds(ev, windows))
+        start, end = bounds[None if part.window is None else part.window.millis]
         op = part.operation
 
         if op == Operation.APPROX_PERCENTILE:
@@ -485,9 +518,7 @@ def _sawtooth_plain(
             p_tile = np.tile(np.asarray(pct, dtype=np.float64), nq)
             ks = np.maximum(1, np.ceil(p_tile * m_rep)).astype(np.int64) - 1
             ks = np.where(m_rep > 0, np.minimum(ks, m_rep - 1), -1)
-            if col not in wavelet_cache:
-                wavelet_cache[col] = _WaveletKth(fv)
-            flat = wavelet_cache[col].query(
+            flat = cached(("wavelet", col), lambda: _WaveletKth(fv)).query(
                 np.repeat(start, npct), np.repeat(end, npct), ks
             ).reshape(nq, npct)
             res = np.full(nq, None, dtype=object)
@@ -498,12 +529,8 @@ def _sawtooth_plain(
         elif op in (Operation.COUNT, Operation.UNIQUE_COUNT,
                     Operation.APPROX_UNIQUE_COUNT):
             if op == Operation.COUNT:
-                ckey = ("__count__", col)
-                if ckey not in nn_idx_cache:
-                    nn_idx_cache[ckey] = np.concatenate(
-                        ([0], np.cumsum(_notnull_mask(vals)))
-                    )
-                p0 = nn_idx_cache[ckey]
+                p0 = cached(("count", col), lambda: np.concatenate(
+                    ([0], np.cumsum(_notnull_mask(vals)))))
                 out[part.output_name] = (p0[end] - p0[start]).astype(np.int64)
             else:
                 # distinct-in-range via the previous-occurrence trick:
@@ -511,10 +538,7 @@ def _sawtooth_plain(
                 # computed ONCE per column (stable argsort chain), each
                 # query is then a C-speed slice count instead of a per-row
                 # Python set/unique pass
-                pkey = ("__prev__", col, id(vals))
-                if pkey not in nn_idx_cache:
-                    nn_idx_cache[pkey] = _prev_occurrence(vals)
-                prev = nn_idx_cache[pkey]
+                prev = cached(("prev", col), lambda: _prev_occurrence(vals))
                 res = np.zeros(nq, dtype=np.int64)
                 for i in range(nq):
                     s, e = start[i], end[i]
@@ -524,15 +548,12 @@ def _sawtooth_plain(
 
         elif op in _MOMENT_POWER:
             need = _MOMENT_POWER[op]
-            key = (col, need)
-            if key not in prefix_cache:
-                prefix_cache[key] = _prefix_powers(_as_float(vals), need)
-            shift, p = prefix_cache[key]
-            n = p[0][end] - p[0][start]
+            sums = cached(("powers", col, need),
+                          lambda: _PowerSums(_as_float(vals), ev // seg.span, need))
+            n, s, shift = sums.window(start, end, seg.query_keys)
             nn = np.maximum(n, 1).astype(np.float64)
             # s[i] are power sums of the SHIFTED values; central moments are
             # shift-invariant, raw sum/mean add the shift back.
-            s = [None] + [p[i][end] - p[i][start] for i in range(1, need + 1)]
             with np.errstate(invalid="ignore", divide="ignore"):
                 if op == Operation.SUM:
                     res = np.where(n > 0, s[1] + shift * n, np.nan)
@@ -554,16 +575,12 @@ def _sawtooth_plain(
             out[part.output_name] = res
 
         elif op in (Operation.MIN, Operation.MAX):
-            key = (col, op == Operation.MAX)
-            if key not in rmm_cache:
-                rmm_cache[key] = _RangeMinMax(_as_float(vals), op == Operation.MAX)
-            out[part.output_name] = rmm_cache[key].query(start, end)
+            is_max = op == Operation.MAX
+            rmq = cached(("rmq", col, is_max), lambda: _RangeMinMax(_as_float(vals), is_max))
+            out[part.output_name] = rmq.query(start, end)
 
         elif op in (Operation.FIRST, Operation.LAST):
-            ckey = (col, id(vals))
-            if ckey not in nn_idx_cache:
-                nn_idx_cache[ckey] = np.flatnonzero(_notnull_mask(vals))
-            nn = nn_idx_cache[ckey]
+            nn = cached(("nonnull", col), lambda: np.flatnonzero(_notnull_mask(vals)))
             # float inputs keep the vectorized NaN-null path (no object
             # boxing); others fall back to object arrays
             is_float = vals.dtype != object
@@ -588,11 +605,8 @@ def _sawtooth_plain(
             # compact the column to its non-null values ONCE; every query
             # then works on [s_pos, e_pos) of the compacted array — no
             # per-query mask materialization
-            ckey = ("__nnvals__", col, id(vals))
-            if ckey not in nn_idx_cache:
-                nn = np.flatnonzero(_notnull_mask(vals))
-                nn_idx_cache[ckey] = (nn, vals[nn])
-            nn, nn_vals = nn_idx_cache[ckey]
+            nn = cached(("nonnull", col), lambda: np.flatnonzero(_notnull_mask(vals)))
+            nn_vals = cached(("nonnull_vals", col), lambda: vals[nn])
             s_pos = np.searchsorted(nn, start, side="left")
             e_pos = np.searchsorted(nn, end, side="left")
             counts = np.minimum(k, e_pos - s_pos)
@@ -616,10 +630,8 @@ def _sawtooth_plain(
                     # struct{sort_key, unique_id} variant
                     # (UniqueOrderByLimit.scala): one element per
                     # unique_id, top-k by sort_key desc / unique_id asc
-                    ukey = ("__utk__", col, id(vals))
-                    if ukey not in nn_idx_cache:
-                        nn_idx_cache[ukey] = _utk_struct_index(vals)
-                    vv, ucodes, skr, urank, uids_v, sks_v = nn_idx_cache[ukey]
+                    vv, ucodes, skr, urank, uids_v, sks_v = cached(
+                        ("utk", col), lambda: _utk_struct_index(vals))
                     us = np.searchsorted(vv, start, side="left")
                     ue = np.searchsorted(vv, end, side="left")
                     res[:] = [
@@ -638,18 +650,18 @@ def _sawtooth_plain(
                 # O(w), then only k elements are sorted
                 asc = op == Operation.BOTTOM_K
                 for i in range(nq):
-                    seg = nn_vals[s_pos[i]:e_pos[i]]
-                    w = len(seg)
+                    win = nn_vals[s_pos[i]:e_pos[i]]
+                    w = len(win)
                     if w == 0:
                         res[i] = []
                     elif w <= k:
-                        srt = np.sort(seg)
+                        srt = np.sort(win)
                         res[i] = srt.tolist() if asc else srt[::-1].tolist()
                     elif asc:
-                        sel = np.partition(seg, k - 1)[:k]
+                        sel = np.partition(win, k - 1)[:k]
                         res[i] = np.sort(sel).tolist()
                     else:
-                        sel = np.partition(seg, w - k)[w - k:]
+                        sel = np.partition(win, w - k)[w - k:]
                         res[i] = np.sort(sel)[::-1].tolist()
             out[part.output_name] = res
 
@@ -658,16 +670,8 @@ def _sawtooth_plain(
             k = part.arg_map.get("k")
             # factorize the stringified values ONCE; each query is then an
             # integer-code unique/count in C instead of a Python Counter
-            hkey = ("__hist__", col, id(vals))
-            if hkey not in nn_idx_cache:
-                nn = np.flatnonzero(_notnull_mask(vals))
-                svals = np.array([str(x) for x in vals[nn].tolist()], dtype=object)
-                import pandas as _pd
-
-                codes, uniq = _pd.factorize(svals) if len(svals) else (
-                    np.empty(0, dtype=np.int64), np.empty(0, dtype=object))
-                nn_idx_cache[hkey] = (nn, codes, np.asarray(uniq, dtype=object))
-            nn, codes, uniq = nn_idx_cache[hkey]
+            nn = cached(("nonnull", col), lambda: np.flatnonzero(_notnull_mask(vals)))
+            codes, uniq = cached(("hist", col), lambda: _str_codes(vals[nn]))
             s_pos = np.searchsorted(nn, start, side="left")
             e_pos = np.searchsorted(nn, end, side="left")
             res = np.full(nq, None, dtype=object)
@@ -694,6 +698,16 @@ def _sawtooth_plain(
         else:
             raise NotImplementedError(f"temporal kernel: {op}")
     return out
+
+
+def _str_codes(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Factorized codes of the stringified values, and the strings."""
+    import pandas as pd
+
+    if not len(vals):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=object)
+    codes, uniq = pd.factorize(np.array([str(x) for x in vals.tolist()], dtype=object))
+    return codes, np.asarray(uniq, dtype=object)
 
 
 def _as_float(vals: np.ndarray) -> np.ndarray:

@@ -12,13 +12,26 @@ default spark.chronon.join.backfill.mode.skewFree=true,
 TableUtils.scala:71-74; README.md:82 claims 9x vs the legacy cogroup
 path).
 
-Our physical plan is the idiomatic PySpark expression of the same shape:
-``left.groupBy(keys).cogroup(right.groupBy(keys)).applyInPandas(kernel)``.
-cogroup-apply is exactly union+groupBy at the shuffle level — each side is
-hash-partitioned by key ONCE, co-located, and handed to the vectorized
-kernel as Arrow batches; there is no join explosion and no per-row Python.
-Skew controls: AQE on; the bucket-hash grouping is itself a generalized
-salt (hot keys share buckets with other keys); for a single MONSTER key,
+One kernel serves every plan: rows are grouped on a hash BUCKET of the
+key and reach Python as `pyarrow.Table`s; the kernel sorts a bucket's
+events once by (key code, ts) and runs the segmented sawtooth, where one
+`searchsorted` over a composite (key, ts) array bounds every query's
+window and the prefix-sum, RMQ and wavelet structures are built once per
+bucket — no per-key Python loop, no pandas. Two physical plans feed it:
+
+* cogroup — ``left.groupBy(bucket).cogroup(right.groupBy(bucket))
+  .applyInArrow``: each side is hash-partitioned ONCE and co-located,
+  exactly union+groupBy at the shuffle level, with no join explosion.
+* one scan — when a one-part join's left is its GroupBy's only event
+  source (same table and Query but for the selects), every left row is
+  a right row: the lookback-widened range is scanned once, rows in the
+  left's own partition range are flagged as queries, and one
+  ``groupBy(bucket).applyInArrow`` serves both roles — half the scan,
+  shuffle and Arrow serde, and no small-mode probe job. The temporal
+  GroupBy (every event its own query) runs on it too.
+
+Skew controls: AQE on; the bucket hash is itself a generalized salt (hot
+keys share buckets with other keys); for a single MONSTER key,
 ``spark.chronon.join.salt = S`` splits its left rows across S kernel
 groups by replicating the right side S times (exact results, verified by
 test_salted_join_matches_unsalted).
@@ -26,18 +39,23 @@ test_salted_join_matches_unsalted).
 
 from __future__ import annotations
 
+from dataclasses import replace
+from functools import reduce
 from typing import Optional
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 from chronon_spark.api import (
     PARTITION_COLUMN,
     TIME_COLUMN,
-    Accuracy,
     AggregationPart,
+    EventSource,
     GroupBy,
     Join,
     JoinPart,
@@ -48,6 +66,8 @@ from chronon_spark.operators.groupby import (
     _union_sources,
     window_days,
 )
+from chronon_spark.operators.sawtooth import sawtooth_aggregate
+from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
 
 def _temporal_scan_range(group_by, rng, spec) -> Optional[PartitionRange]:
@@ -66,8 +86,7 @@ def _temporal_scan_range(group_by, rng, spec) -> Optional[PartitionRange]:
         return PartitionRange(None, rng.end, spec)  # lifetime: full history
     max_days = max(lookbacks, default=1)
     return PartitionRange(spec.shift(rng.start, -(max_days + 1)), rng.end, spec)
-from chronon_spark.operators.sawtooth import sawtooth_aggregate
-from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
+
 
 _ARRAY_OPS = (
     Operation.FIRST_K,
@@ -88,6 +107,8 @@ _DOUBLE_OPS = (
     Operation.SKEW,
     Operation.KURTOSIS,
 )
+# query time of a left row whose ts is NULL: before every event
+_NO_TS = -(1 << 62)
 
 
 def output_sql_type(part: AggregationPart, input_type: str) -> str:
@@ -127,96 +148,135 @@ def output_sql_type(part: AggregationPart, input_type: str) -> str:
     return base
 
 
-def _np_col(pdf: pd.DataFrame, col: str, input_type: str) -> np.ndarray:
-    """pandas column -> kernel array: floats w/ NaN nulls for numerics,
-    object w/ None for the rest."""
-    s = pdf[col]
-    if input_type in ("double", "float", "bigint", "int", "smallint", "tinyint", "boolean"):
-        return s.astype("float64").to_numpy()
-    return s.to_numpy(dtype=object)
+def _input_columns(parts: list[AggregationPart]) -> list[str]:
+    return sorted({p.input_column for p in parts} | {p.bucket for p in parts if p.bucket})
 
 
-def _emit(res: np.ndarray, sql_type: str):
-    """kernel output -> pandas column matching the Arrow schema."""
-    if sql_type == "bigint":
-        if res.dtype == object:
-            # round, don't truncate: prefix-sum floats of exact integers can
-            # sit epsilon below the true integer
-            return pd.array(
-                [None if v is None or v != v else int(round(v)) for v in res],
-                dtype="Int64",
-            )
-        if res.dtype.kind == "f":
-            mask = np.isnan(res)
-            ints = np.where(mask, 0, np.round(res)).astype(np.int64)
-            return pd.arrays.IntegerArray(ints, mask)
-        return pd.array(res, dtype="Int64")
-    if sql_type in ("int", "smallint"):
-        return pd.array(
-            [None if v is None or v != v else int(round(v)) for v in res], dtype="Int32"
+def _is_scalar(t: pa.DataType) -> bool:
+    return pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_boolean(t)
+
+
+def _values(col: pa.ChunkedArray) -> np.ndarray:
+    """Arrow column -> kernel array: float64 with NaN nulls for numbers
+    and booleans, objects with None for the rest (maps as dicts)."""
+    if _is_scalar(col.type):
+        return col.cast(pa.float64()).to_numpy()
+    vals = col.to_pylist()
+    if pa.types.is_map(col.type):
+        vals = [None if v is None else dict(v) for v in vals]
+    return np.fromiter(vals, dtype=object, count=len(vals))
+
+
+def _to_arrow(res: np.ndarray, typ: pa.DataType) -> pa.Array:
+    """Kernel output (NaN/None = null) -> Arrow array of the feature's type."""
+    if not _is_scalar(typ):
+        return pa.array(
+            [None if isinstance(v, float) and v != v else v for v in res.tolist()],
+            type=typ,
         )
-    if sql_type == "double":
-        # kernel convention: NaN == null. Use the masked Float64 array so
-        # Arrow writes genuine SQL NULLs (plain float64 NaN survives as NaN).
-        if res.dtype == object:
-            vals = np.array(
-                [np.nan if v is None else float(v) for v in res], dtype=np.float64
-            )
-        else:
-            vals = res.astype(np.float64, copy=False)
-        return pd.arrays.FloatingArray(vals.copy(), np.isnan(vals))
-    return pd.Series(list(res), dtype=object)
+    if res.dtype.kind in "iu":
+        return pa.array(res).cast(typ)
+    if res.dtype == object:
+        res = np.array([np.nan if v is None else float(v) for v in res], dtype=np.float64)
+    mask = np.isnan(res)
+    if not pa.types.is_floating(typ):
+        # round, don't truncate: prefix-sum floats of exact integers can
+        # sit epsilon below the true integer
+        res = np.round(res)
+    return pa.array(np.where(mask, 0.0, res), mask=mask).cast(typ)
 
 
-def _empty_feature(part: AggregationPart, sql_type: str, nq: int):
-    """Feature column for left rows whose key has NO right rows."""
-    if part.bucket is not None or sql_type.startswith("map<"):
-        return pd.Series([{} for _ in range(nq)], dtype=object)
-    if part.operation in (Operation.COUNT, Operation.UNIQUE_COUNT):
-        return _emit(np.zeros(nq, dtype=np.int64), sql_type)
-    if part.operation in _ARRAY_OPS:
-        return pd.Series([[] for _ in range(nq)], dtype=object)
-    if part.operation in _MAP_OPS:
-        return pd.Series([{} for _ in range(nq)], dtype=object)
-    return _emit(np.full(nq, None, dtype=object), sql_type)
+def _key_codes(left: list, right: list) -> tuple[np.ndarray, np.ndarray]:
+    """Joint int64 codes of the (composite) key values of both sides;
+    NULL matches NULL. Key types are aligned Spark-side beforehand, so
+    equal codes mean equal keys under the bucket hash."""
+    nl = len(left[0])
+    code = None
+    for lcol, rcol in zip(left, right):
+        both = pa.concat_arrays([lcol.combine_chunks(), rcol.combine_chunks()])
+        enc = both.dictionary_encode(null_encoding="encode")
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        code = idx if code is None else np.unique(
+            code * len(enc.dictionary) + idx, return_inverse=True)[1].astype(np.int64)
+    return code[:nl], code[nl:]
 
 
-def _norm_key(s: pd.Series, spark_type: str) -> pd.Series:
-    """Coerce a key column to the right side's Spark type so factorize
-    agrees with the bucket hash (which casts left keys Spark-side): int 5
-    and string '5' must match when the declared key type is string."""
-    if spark_type == "string":
-        return s.map(lambda v: None if v is None else str(v))
-    if spark_type in ("bigint", "int", "smallint", "tinyint"):
-        return pd.to_numeric(s, errors="coerce").astype("Int64")
-    if spark_type in ("double", "float"):
-        return pd.to_numeric(s, errors="coerce").astype("float64")
-    return s
-
-
-def _segment_codes(
-    lpdf: pd.DataFrame,
-    rpdf: pd.DataFrame,
+def _as_of_kernel(
+    left_fields: list[StructField],
+    right_types: dict[str, str],
     left_keys: list[str],
     right_keys: list[str],
-    key_types: Optional[list[str]] = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Joint integer codes for composite keys across both frames —
-    vectorized (np.unique over concatenated values per key column)."""
-    nl = len(lpdf)
-    lcode = np.zeros(nl, dtype=np.int64)
-    rcode = np.zeros(len(rpdf), dtype=np.int64)
-    key_types = key_types or [None] * len(left_keys)
-    for lk, rk, kt in zip(left_keys, right_keys, key_types):
-        lv, rv = lpdf[lk], rpdf[rk]
-        if kt is not None and lv.dtype != rv.dtype:
-            lv, rv = _norm_key(lv, kt), _norm_key(rv, kt)
-        both = pd.concat([lv, rv], ignore_index=True)
-        codes, uniq = pd.factorize(both, use_na_sentinel=False)
-        n = len(uniq)
-        lcode = lcode * n + codes[:nl]
-        rcode = rcode * n + codes[nl:]
-    return lcode, rcode
+    parts: list[AggregationPart],
+    prefix: str,
+    left_time: str,
+    right_time: str = TIME_COLUMN,
+):
+    """The as-of kernel shared by every plan, and its output schema.
+
+    Returns (kernel, schema): `kernel(left, right)` maps a bucket's
+    query rows and event rows (`pyarrow.Table`s) to the query rows'
+    `left_fields` columns plus one `{prefix}{output_name}` column per
+    part; `schema` is the Spark StructType of that output."""
+    input_cols = _input_columns(parts)
+    array_inputs = {c for c in input_cols if right_types[c].startswith("array<")}
+    map_inputs = {c for c in input_cols if right_types[c].startswith("map<")}
+    names = [f"{prefix}{p.output_name}" for p in parts]
+    features_ddl = ", ".join(
+        f"`{n}` {output_sql_type(p, right_types[p.input_column])}"
+        for n, p in zip(names, parts)
+    )
+    schema = StructType(list(left_fields) + _parse_datatype_string(features_ddl).fields)
+    arrow_schema = pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields])
+    left_cols = [f.name for f in left_fields]
+    ftypes = [arrow_schema.field(n).type for n in names]
+
+    def kernel(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0:
+            return arrow_schema.empty_table()
+        lcode, rcode = _key_codes(
+            [left[k] for k in left_keys], [right[k] for k in right_keys])
+        rts = right[right_time].to_numpy()
+        order = np.lexsort((rts, rcode))
+        lts = pc.fill_null(left[left_time].cast(pa.int64()), _NO_TS).to_numpy()
+        res = sawtooth_aggregate(
+            rts[order],
+            {c: _values(right[c])[order] for c in input_cols},
+            lts,
+            parts,
+            array_inputs=array_inputs,
+            map_inputs=map_inputs,
+            event_keys=rcode[order],
+            query_keys=lcode,
+        )
+        return pa.Table.from_arrays(
+            [left[c] for c in left_cols]
+            + [_to_arrow(res[p.output_name], t) for p, t in zip(parts, ftypes)],
+            schema=arrow_schema,
+        )
+
+    return kernel, schema
+
+
+def _buckets(spark: SparkSession, buckets: Optional[int]) -> int:
+    """`buckets`, else spark.chronon.join.buckets, else 8x shuffle partitions."""
+    if buckets is not None:
+        return buckets
+    default = 8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return int(spark.conf.get("spark.chronon.join.buckets", str(default)))
+
+
+def _salting(spark: SparkSession) -> tuple[int, int, list[str]]:
+    """(salt, salt.time_days, salt.keys) from the session conf; the two
+    modes are exclusive."""
+    salt = int(spark.conf.get("spark.chronon.join.salt", "1"))
+    time_days = int(spark.conf.get("spark.chronon.join.salt.time_days", "0"))
+    salt_keys = [s for s in spark.conf.get("spark.chronon.join.salt.keys", "").split(",") if s]
+    if salt > 1 and time_days > 0:
+        raise ValueError(
+            "spark.chronon.join.salt > 1 and spark.chronon.join.salt.time_days"
+            " > 0 are exclusive salting modes; set one of them")
+    return salt, time_days, salt_keys
 
 
 def temporal_features(
@@ -239,22 +299,18 @@ def temporal_features(
 
     Physical plan: both sides are cogrouped on `pmod(xxhash64(keys),
     buckets)` — NOT on the raw key — and the kernel processes every key in
-    the bucket from one Arrow batch. PySpark's cogroup serde costs
+    the bucket from one Arrow table per side. PySpark's cogroup serde costs
     milliseconds PER GROUP, so per-key grouping caps throughput at a few
     hundred groups/sec/core; bucketing amortizes that over thousands of
-    keys while the per-key sawtooth still runs on zero-copy array views.
+    keys, and the segmented kernel serves all of them in one pass.
     `buckets` defaults to 8x shuffle partitions (conf
     spark.chronon.join.buckets overrides) — at cluster scale size it so a
     bucket's rows fit executor memory.
     """
     spark = left_df.sparkSession
-    if buckets is None:
-        buckets = int(
-            spark.conf.get(
-                "spark.chronon.join.buckets",
-                str(8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))),
-            )
-        )
+    buckets = _buckets(spark, buckets)
+    left_fields = list(left_df.schema.fields)
+    salt, time_days, salt_keys = _salting(spark)
     # hot-key salting (spark.chronon.join.salt = S > 1): left rows spread
     # over S salts by a ts-derived hash; the right side is REPLICATED S
     # times and (key, salt) becomes the cogroup key — a monster key's left
@@ -266,8 +322,9 @@ def temporal_features(
     # 32M-row join with one 3% monster key), targeted salting pays the
     # replication only where the skew is. Exactness is oracle-pinned
     # either way (temporal_join_salted gate query,
-    # test_salted_join_matches_unsalted).
-    salt = int(spark.conf.get("spark.chronon.join.salt", "1"))
+    # test_salted_join_matches_unsalted). The `__salt` key column is
+    # internal: the output keeps exactly left_df's columns.
+    #
     # EVENT-heavy hot keys (spark.chronon.join.salt.time_days = D, with
     # salt.keys): query-side salting cannot help a key whose EVENT
     # history dominates (every salt slice re-processes all its events —
@@ -277,13 +334,11 @@ def temporal_features(
     # most ceil(max_window/D)+1 chunks (the only ones whose queries can
     # see it) — per-chunk kernel input is bounded by the chunk's own
     # traffic plus one window of lookback, regardless of total history.
-    time_days = int(spark.conf.get("spark.chronon.join.salt.time_days",
-                                   "0"))
+    l_hot = r_hot = F.lit(True)
+    if salt_keys:
+        l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
+        r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
     if time_days > 0:
-        salt_keys = [
-            s for s in spark.conf.get(
-                "spark.chronon.join.salt.keys", "").split(",") if s != ""
-        ]
         if not salt_keys:
             raise ValueError(
                 "spark.chronon.join.salt.time_days requires salt.keys")
@@ -300,74 +355,35 @@ def temporal_features(
         # window size), so the visibility horizon is max_w + hop, not
         # max_w — bound with a full day to stay safe for all hops
         reps = (max_w + 86_400_000) // span + 2
-        l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
-        r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
-        left_df = left_df.withColumn(
-            "__salt",
-            F.when(l_hot, F.floor(F.col(time_col) / F.lit(span)))
-            .otherwise(F.lit(0)).cast("long"),
-        )
-        # event at ts serves query chunks floor(ts/span) ..
-        # floor((ts+max_w)/span); emit the distinct chunk ids
+        l_salt = F.floor(F.col(time_col) / F.lit(span))
         chunk0 = F.floor(F.col(TIME_COLUMN) / F.lit(span)).cast("long")
-        right_df = right_df.withColumn(
-            "__salt",
-            F.explode(F.when(
-                r_hot,
-                F.array_distinct(F.array(*[
-                    chunk0 + F.lit(i).cast("long") for i in range(reps)
-                ])),
-            ).otherwise(F.array(F.lit(0).cast("long")))),
-        )
-        left_keys = list(left_keys) + ["__salt"]
-        right_keys = list(right_keys) + ["__salt"]
+        r_salts = F.array_distinct(
+            F.array(*[chunk0 + F.lit(i).cast("long") for i in range(reps)]))
     elif salt > 1:
-        salt_keys = [
-            s for s in spark.conf.get(
-                "spark.chronon.join.salt.keys", "").split(",") if s != ""
-        ]
-        all_salts = F.array(*[F.lit(i).cast("long") for i in range(salt)])
-        if salt_keys:
-            l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
-            r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
-            left_df = left_df.withColumn(
-                "__salt",
-                F.when(
-                    l_hot,
-                    F.pmod(F.xxhash64(*[F.col(k) for k in left_keys],
-                                      F.col(time_col)), F.lit(salt)),
-                ).otherwise(F.lit(0).cast("long")),
-            )
-            right_df = right_df.withColumn(
-                "__salt",
-                F.explode(F.when(r_hot, all_salts)
-                          .otherwise(F.array(F.lit(0).cast("long")))),
-            )
-        else:
-            left_df = left_df.withColumn(
-                "__salt",
-                F.pmod(F.xxhash64(*[F.col(k) for k in left_keys],
-                                  F.col(time_col)), F.lit(salt)),
-            )
-            right_df = right_df.withColumn("__salt", F.explode(all_salts))
+        l_salt = F.pmod(F.xxhash64(*[F.col(k) for k in left_keys], F.col(time_col)),
+                        F.lit(salt))
+        r_salts = F.array(*[F.lit(i).cast("long") for i in range(salt)])
+    if time_days > 0 or salt > 1:
+        left_df = left_df.withColumn(
+            "__salt", F.when(l_hot, l_salt).otherwise(F.lit(0)).cast("long"))
+        right_df = right_df.withColumn("__salt", F.explode(
+            F.when(r_hot, r_salts).otherwise(F.array(F.lit(0).cast("long")))))
         left_keys = list(left_keys) + ["__salt"]
         right_keys = list(right_keys) + ["__salt"]
     right_types = dict(right_df.dtypes)
+    # left keys cast to the right's types (as hidden columns when they
+    # differ), so both the bucket hash and the kernel's key codes agree:
+    # int 5 and string '5' match when the declared key type is string
     left_types = dict(left_df.dtypes)
-    input_cols = sorted(
-        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
-    )
-    array_inputs = {c for c in input_cols if right_types[c].startswith("array<")}
-    map_inputs = {c for c in input_cols if right_types[c].startswith("map<")}
-    feature_fields = [
-        (f"{prefix}{p.output_name}", output_sql_type(p, right_types[p.input_column]))
-        for p in parts
-    ]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left_df.schema.fields]
-        + [f"`{n}` {t}" for n, t in feature_fields]
-    )
-    left_cols = [f.name for f in left_df.schema.fields]
+    aligned = []
+    for i, (lk, rk) in enumerate(zip(left_keys, right_keys)):
+        if left_types[lk] != right_types[rk]:
+            left_df = left_df.withColumn(f"__key{i}", F.col(lk).cast(right_types[rk]))
+            lk = f"__key{i}"
+        aligned.append(lk)
+    kernel, schema = _as_of_kernel(
+        left_fields, right_types, aligned, right_keys, parts, prefix, time_col)
+    input_cols = _input_columns(parts)
     right_needed = list(dict.fromkeys(right_keys + [TIME_COLUMN] + input_cols))
     # fresh aliases mint new exprIds so a self-cogroup (left derived from the
     # same scan as right) doesn't get its shared attributes deduplicated away
@@ -375,79 +391,48 @@ def temporal_features(
         right_df.select(*[F.col(c).alias(c) for c in right_needed])
         .where(F.col(TIME_COLUMN).isNotNull())
     )
-    # hash on type-aligned keys so both sides bucket identically
-    lkey_exprs = [
-        F.col(lk).cast(right_types[rk]) for lk, rk in zip(left_keys, right_keys)
-    ]
-    l_bucket = F.pmod(F.xxhash64(*lkey_exprs), F.lit(buckets))
+    l_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in aligned]), F.lit(buckets))
     r_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in right_keys]), F.lit(buckets))
-
-    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=left_cols + [n for n, _ in feature_fields])
-        nq = len(lpdf)
-        out = lpdf[left_cols].copy().reset_index(drop=True)
-        if len(rpdf) == 0:
-            for (name, sql_type), part in zip(feature_fields, parts):
-                out[name] = _empty_feature(part, sql_type, nq)
-            return out
-        lcode, rcode = _segment_codes(
-            lpdf, rpdf, left_keys, right_keys,
-            [right_types[rk] for rk in right_keys],
-        )
-        # sort each side by (key, ts); all per-key work happens on views
-        lts = lpdf[time_col].to_numpy().astype(np.int64)
-        rts = rpdf[TIME_COLUMN].to_numpy().astype(np.int64)
-        lorder = np.lexsort((lts, lcode))
-        rorder = np.lexsort((rts, rcode))
-        lcode_s, lts_s = lcode[lorder], lts[lorder]
-        rcode_s, rts_s = rcode[rorder], rts[rorder]
-        evals = {c: _np_col(rpdf, c, right_types[c])[rorder] for c in input_cols}
-        # typed buffers: numeric features accumulate in float64 (NaN=null,
-        # exact for int64 < 2^53) so emit stays fully vectorized; complex
-        # types (arrays/maps/strings) use object buffers
-        outs = {
-            name: (
-                np.full(nq, np.nan)
-                if t in ("double", "bigint", "int", "smallint")
-                else np.full(nq, None, dtype=object)
-            )
-            for name, t in feature_fields
-        }
-        # per-key segments (contiguous after the sorts)
-        l_bounds = np.flatnonzero(np.diff(lcode_s, prepend=lcode_s[0] - 1))
-        l_bounds = np.append(l_bounds, nq)
-        for seg in range(len(l_bounds) - 1):
-            s, e = l_bounds[seg], l_bounds[seg + 1]
-            code = lcode_s[s]
-            r0 = np.searchsorted(rcode_s, code, side="left")
-            r1 = np.searchsorted(rcode_s, code, side="right")
-            feats = sawtooth_aggregate(
-                rts_s[r0:r1],
-                {c: v[r0:r1] for c, v in evals.items()},
-                lts_s[s:e],
-                parts,
-                array_inputs=array_inputs,
-                map_inputs=map_inputs,
-            )
-            pos = lorder[s:e]
-            for (name, t), part in zip(feature_fields, parts):
-                vals_out = feats[part.output_name]
-                if outs[name].dtype == object:
-                    outs[name][pos] = np.asarray(vals_out, dtype=object)
-                else:
-                    outs[name][pos] = np.asarray(
-                        [np.nan if v is None else v for v in vals_out], dtype=np.float64
-                    ) if np.asarray(vals_out).dtype == object else vals_out
-        for (name, sql_type), part in zip(feature_fields, parts):
-            out[name] = _emit(outs[name], sql_type)
-        return out
-
     grouped = left_df.groupBy(l_bucket.alias("__bucket")).cogroup(
         right_slim.groupBy(r_bucket.alias("__bucket"))
     )
-    out = grouped.applyInPandas(kernel, schema=out_schema)
-    return out.drop("__salt") if salt > 1 else out
+    return grouped.applyInArrow(kernel, schema=schema)
+
+
+def _one_scan(
+    df: DataFrame,
+    keys: list[str],
+    parts: list[AggregationPart],
+    query: Column,
+    event: Column,
+    out_cols: list[str],
+    prefix: str = "",
+    time_col: str = TIME_COLUMN,
+    buckets: Optional[int] = None,
+) -> DataFrame:
+    """Features for the rows of `df` flagged by `query`, as-of their own
+    timestamps, over the rows flagged by `event` — one scan, one hash
+    shuffle and one Arrow kernel call per bucket, where the cogroup plan
+    would scan, shuffle and serialize the same table twice. Returns
+    `out_cols` + one `{prefix}{output_name}` column per part."""
+    buckets = _buckets(df.sparkSession, buckets)
+    types = dict(df.dtypes)
+    kernel, schema = _as_of_kernel(
+        [df.schema[c] for c in out_cols], types, keys, keys, parts, prefix,
+        time_col, time_col)
+    input_cols = _input_columns(parts)
+    needed = list(dict.fromkeys(out_cols + keys + [time_col] + input_cols))
+    slim = df.select(
+        *needed,
+        F.coalesce(query, F.lit(False)).alias("__query"),
+        F.coalesce(event, F.lit(False)).alias("__event"),
+    ).where(F.col("__query") | F.col("__event"))
+
+    def one_scan(table: pa.Table) -> pa.Table:
+        return kernel(table.filter(table["__query"]), table.filter(table["__event"]))
+
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(buckets))
+    return slim.groupBy(bucket.alias("__bucket")).applyInArrow(one_scan, schema=schema)
 
 
 def temporal_self_features(
@@ -461,113 +446,22 @@ def temporal_self_features(
 ) -> DataFrame:
     """TEMPORAL GroupBy fast path: features for every source row as-of its
     OWN timestamp (reference: GroupBy.temporalEvents with the source as
-    its own query set).
-
-    The generic cogroup plan would scan and shuffle the SAME table twice
-    (left = queries, right = events) and sort both sides. Here the table
-    flows through ONE scan -> ONE hash shuffle -> ONE sort ->
-    applyInPandas, and the kernel serves each row's query from the very
-    batch it arrived in — half the shuffle bytes and half the Arrow
-    serde of the join path, which is exactly the memory-bandwidth-bound
-    portion at high parallelism.
+    its own query set), on the one-scan plan. Returns keys + ts +
+    features.
 
     `query_lo`/`query_hi` (epoch ms) bound WHICH rows emit output (the
     backfill range) while all rows still feed window state — the self
     analog of the join path's lookback-widened right scan.
     """
-    spark = df.sparkSession
-    if buckets is None:
-        buckets = int(
-            spark.conf.get(
-                "spark.chronon.join.buckets",
-                str(8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))),
-            )
-        )
-    types = dict(df.dtypes)
-    input_cols = sorted(
-        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
-    )
-    array_inputs = {c for c in input_cols if types[c].startswith("array<")}
-    map_inputs = {c for c in input_cols if types[c].startswith("map<")}
-    feature_fields = [
-        (p.output_name, output_sql_type(p, types[p.input_column])) for p in parts
-    ]
-    needed = list(dict.fromkeys(keys + [time_col] + input_cols))
-    slim = df.select(*needed).where(F.col(time_col).isNotNull())
-    out_schema = ", ".join(
-        [f"`{c}` {types[c]}" for c in keys + [time_col]]
-        + [f"`{n}` {t}" for n, t in feature_fields]
-    )
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(buckets))
-    lo = -(1 << 62) if query_lo is None else int(query_lo)
-    hi = (1 << 62) if query_hi is None else int(query_hi)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(
-                columns=keys + [time_col] + [f for f, _ in feature_fields]
-            )
-        code = np.zeros(n, dtype=np.int64)
-        for k in keys:
-            codes, uniq = pd.factorize(pdf[k], use_na_sentinel=False)
-            code = code * len(uniq) + codes
-        ts = pdf[time_col].to_numpy().astype(np.int64)
-        order = np.lexsort((ts, code))
-        code_s, ts_s = code[order], ts[order]
-        evals = {c: _np_col(pdf, c, types[c])[order] for c in input_cols}
-        qmask = (ts_s >= lo) & (ts_s < hi)
-        nq = int(qmask.sum())
-        outs = {
-            name: (
-                np.full(nq, np.nan)
-                if t in ("double", "bigint", "int", "smallint")
-                else np.full(nq, None, dtype=object)
-            )
-            for name, t in feature_fields
-        }
-        qpos = np.cumsum(qmask) - 1  # output slot per masked row
-        bounds = np.flatnonzero(np.diff(code_s, prepend=code_s[0] - 1))
-        bounds = np.append(bounds, n)
-        for seg in range(len(bounds) - 1):
-            s, e = bounds[seg], bounds[seg + 1]
-            qm = qmask[s:e]
-            if not qm.any():
-                continue
-            feats = sawtooth_aggregate(
-                ts_s[s:e],
-                {c: v[s:e] for c, v in evals.items()},
-                ts_s[s:e][qm],
-                parts,
-                array_inputs=array_inputs,
-                map_inputs=map_inputs,
-            )
-            pos = qpos[s:e][qm]
-            for (name, _), part in zip(feature_fields, parts):
-                vals_out = feats[part.output_name]
-                if outs[name].dtype == object:
-                    outs[name][pos] = np.asarray(vals_out, dtype=object)
-                else:
-                    arr = np.asarray(vals_out)
-                    outs[name][pos] = (
-                        np.asarray(
-                            [np.nan if v is None else v for v in vals_out],
-                            dtype=np.float64,
-                        )
-                        if arr.dtype == object
-                        else arr
-                    )
-        # masked rows in sorted order == output slot order (qpos is the
-        # running index over that same order)
-        sel = order[np.flatnonzero(qmask)]
-        out = pdf.iloc[sel][keys + [time_col]].reset_index(drop=True)
-        for (name, sql_type), part in zip(feature_fields, parts):
-            out[name] = _emit(outs[name], sql_type)
-        return out
-
-    return slim.groupBy(bucket.alias("__bucket")).applyInPandas(
-        kernel, schema=out_schema
-    )
+    ts = F.col(time_col)
+    query = ts.isNotNull()
+    if query_lo is not None:
+        query = query & (ts >= F.lit(int(query_lo)))
+    if query_hi is not None:
+        query = query & (ts < F.lit(int(query_hi)))
+    return _one_scan(
+        df, keys, parts, query, ts.isNotNull(), keys + [time_col],
+        time_col=time_col, buckets=buckets)
 
 
 def compute_temporal_join_part(
@@ -712,7 +606,9 @@ def compute_temporal_join(
 ) -> DataFrame:
     """Full join: left source scanned once, then enriched per part.
 
-    Single part: one co-partitioned cogroup over the left (no extra join).
+    Single part whose GroupBy reads the left's own event source: the
+    one-scan plan (`_one_scan_join`). Other single parts: one
+    co-partitioned cogroup over the left (no extra join).
     Multiple parts: each part cogroups a SLIM probe — (row_id, ts, the
     union of join-key columns) — and the feature columns merge back onto
     the left by row id at the end (the monolith analog of the modular
@@ -725,9 +621,11 @@ def compute_temporal_join(
     materializes ids to disk for full re-execution safety."""
     from chronon_spark.sources.scan import scan_source
 
-    left_df = scan_source(spark, join.left, rng, spec)
-    left_df = _apply_skew_filter(left_df, join)
-    if len(join.join_parts) <= 1:
+    merged = _one_scan_source(spark, join, spec)
+    if merged is not None:
+        out = _one_scan_join(spark, join, merged, rng, spec)
+    elif len(join.join_parts) <= 1:
+        left_df = _apply_skew_filter(scan_source(spark, join.left, rng, spec), join)
         out = left_df
         for jp in join.join_parts:
             out = compute_temporal_join_part(
@@ -735,6 +633,7 @@ def compute_temporal_join(
                 probe_df=left_df,
             )
     else:
+        left_df = _apply_skew_filter(scan_source(spark, join.left, rng, spec), join)
         row_id = "__row_id"
         base = left_df.withColumn(row_id, F.monotonically_increasing_id())
         need = {TIME_COLUMN}
@@ -755,9 +654,93 @@ def compute_temporal_join(
     if join.derivations:
         from chronon_spark.api import apply_derivations
 
-        ensure = list(join.row_ids or []) or _join_ensure_keys(join, left_df)
+        # the output carries every left column, so it stands in for the left
+        ensure = list(join.row_ids or []) or _join_ensure_keys(join, out)
         out = apply_derivations(out, join.derivations, ensure)
     return out
+
+
+def _one_scan_source(
+    spark: SparkSession, join: Join, spec: PartitionSpec = DEFAULT_SPEC,
+) -> Optional[EventSource]:
+    """The single source a join can be computed from in one scan, or None.
+
+    That is the case when the join has one part, its GroupBy's only source
+    is an EventSource over the left's table with the same Query but for
+    the selects (names both select must map to the same expression), the
+    join keys are the GroupBy's key names, and no salting is configured:
+    every left row is then also one of the right's rows. The returned
+    source selects the union of both sides' columns."""
+    if len(join.join_parts) != 1:
+        return None
+    jp = join.join_parts[0]
+    gb = jp.group_by
+    left = join.left
+    if len(gb.sources) != 1 or type(left) is not EventSource:
+        return None
+    right = gb.sources[0]
+    if (type(right) is not EventSource or right.table != left.table
+            or right.is_cumulative != left.is_cumulative
+            or replace(right.query, selects=None) != replace(left.query, selects=None)):
+        return None
+    ls, rs = left.query.selects, right.query.selects
+    if (ls is None) != (rs is None):
+        return None
+    if ls is not None and (
+            any(ls[c] != rs[c] for c in ls.keys() & rs.keys())
+            or (rs.keys() - ls.keys()) & {TIME_COLUMN, _partition_column(left, spec)}):
+        return None
+    if any(k != v for k, v in jp.right_to_left_keys().items()):
+        return None
+    salt, time_days, _ = _salting(spark)
+    if salt > 1 or time_days > 0:
+        return None
+    selects = None if ls is None else {**ls, **rs}
+    return replace(left, query=replace(left.query, selects=selects))
+
+
+def _partition_column(source: EventSource, spec: PartitionSpec) -> str:
+    return source.query.partition_column or spec.column
+
+
+def _one_scan_join(
+    spark: SparkSession,
+    join: Join,
+    source: EventSource,
+    rng: Optional[PartitionRange],
+    spec: PartitionSpec,
+) -> DataFrame:
+    """A one-part join whose left is its GroupBy's own event source
+    (`_one_scan_source`), on the one-scan plan: the lookback-widened range
+    is scanned once; rows inside the left scan's own partition range (and
+    its skew filter) are the queries, rows the GroupBy would aggregate
+    (some key non-null, skew-filtered) are the events. Null-key left rows
+    stay, with empty features. Output columns equal the cogroup plan's."""
+    from chronon_spark.sources.scan import scan_source
+
+    jp = join.join_parts[0]
+    gb = jp.group_by
+    keys = gb.key_columns
+    df = scan_source(spark, source, _temporal_scan_range(gb, rng, spec), spec)
+    part_col = _partition_column(source, spec)
+    # the left scan's columns, in its order: its own selects plus the time
+    # and partition columns every scan adds
+    selects = join.left.query.selects
+    left_cols = [c for c in df.columns
+                 if selects is None or c in selects or c in (TIME_COLUMN, part_col)]
+    query = F.lit(True)
+    for clause in rng.where_clauses(part_col) if rng is not None else []:
+        query = query & F.expr(clause)
+    event = F.col(TIME_COLUMN).isNotNull() & reduce(
+        Column.__or__, [F.col(k).isNotNull() for k in keys])
+    for col, values in (join.skew_keys or {}).items():
+        keep = ~F.col(col).isin(values) | F.col(col).isNull()
+        if col in left_cols:
+            query = query & keep
+        if col in keys:
+            event = event & keep
+    return _one_scan(df, keys, gb.aggregation_parts(), query, event, left_cols,
+                     prefix=jp.full_prefix() + "_")
 
 
 def _join_ensure_keys(join: Join, left_df: DataFrame) -> list[str]:

@@ -221,3 +221,75 @@ def test_time_sharded_salting_matches_unsalted(spark):
             assert ss is None
         else:
             assert ss == pytest.approx(bs), k
+
+
+def _salting_fixture(spark):
+    rng = np.random.default_rng(59)
+    n = 4000
+    keys = np.where(rng.random(n) < 0.6, 7, rng.integers(0, 20, n))
+    ts = np.sort(rng.integers(0, 20 * DAY, n)) + BASE
+    ev = [(int(k), int(t), int(rng.integers(0, 1000)))
+          for k, t in zip(keys, ts)]
+    right = spark.createDataFrame(ev, "user_id int, ts long, value long")
+    q = [(int(rng.integers(0, 20)), int(BASE + rng.integers(0, 20 * DAY)), f"q{i}")
+         for i in range(400)]
+    left = spark.createDataFrame(q, "user_id int, ts long, tag string")
+    parts = [
+        AggregationPart("value", Operation.SUM, window=Window(7)),
+        AggregationPart("value", Operation.COUNT, window=Window(1)),
+        AggregationPart("value", Operation.LAST_K, arg_map={"k": 3},
+                        window=Window(7)),
+    ]
+    return left, right, parts
+
+
+_SALT_CONFS = ("spark.chronon.join.salt", "spark.chronon.join.salt.keys",
+               "spark.chronon.join.salt.time_days")
+
+
+def test_salting_modes_same_columns_and_values(spark):
+    """Unsalted, hash-salted (global and targeted) and time-sharded plans
+    return the same columns in the same order and the same rows: the
+    internal `__salt` key never reaches the output (it used to leak when
+    only salt.time_days was set)."""
+    left, right, parts = _salting_fixture(spark)
+    modes = {
+        "unsalted": {},
+        "hash": {"spark.chronon.join.salt": "4"},
+        "hash_targeted": {"spark.chronon.join.salt": "4",
+                          "spark.chronon.join.salt.keys": "7"},
+        "time_sharded": {"spark.chronon.join.salt.time_days": "3",
+                         "spark.chronon.join.salt.keys": "7"},
+    }
+    results = {}
+    for mode, confs in modes.items():
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            out = temporal_features(left, right, ["user_id"], ["user_id"], parts)
+            results[mode] = (out.columns, sorted(tuple(r) for r in out.collect()))
+        finally:
+            for k in _SALT_CONFS:
+                spark.conf.unset(k)
+    cols, rows = results["unsalted"]
+    assert cols == left.columns + [
+        "value_sum_7d", "value_count_1d", "value_last3_7d"]
+    assert len(rows) == 400
+    for mode, (c, r) in results.items():
+        assert c == cols, mode
+        assert r == rows, mode
+
+
+def test_hash_salt_with_time_shards_is_rejected(spark):
+    """salt > 1 and salt.time_days > 0 are two different hot-key plans;
+    setting both is an error, not a silent precedence."""
+    left, right, parts = _salting_fixture(spark)
+    spark.conf.set("spark.chronon.join.salt", "4")
+    spark.conf.set("spark.chronon.join.salt.time_days", "3")
+    spark.conf.set("spark.chronon.join.salt.keys", "7")
+    try:
+        with pytest.raises(ValueError, match="exclusive"):
+            temporal_features(left, right, ["user_id"], ["user_id"], parts)
+    finally:
+        for k in _SALT_CONFS:
+            spark.conf.unset(k)
